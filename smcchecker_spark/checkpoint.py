@@ -222,7 +222,7 @@ def run_with_checkpoint(
         # (caught by the 500k crash+resume soak, BENCH.md)
         result = runner.run(wave_df, full_scope=df, shared_cache=shared_cache)
         store.write_wave(runner.run_id, wave, result)
-        result.violations.unpersist()
+        result.unpersist()
         processed.update(batch)
         wave += 1
     return processed

@@ -29,7 +29,7 @@ dict at proj/core/functions.py:8-30, exploded to row granularity):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -59,14 +59,17 @@ VIOLATION_SCHEMA = T.StructType(
 VIOLATION_COLS = [f.name for f in VIOLATION_SCHEMA.fields]
 
 
+def part_id_expr(df: DataFrame, part_id_col: str | None) -> Column:
+    """A row's partition id: the explicit ``part_id_col`` when ``df`` has
+    it, else the physical Spark partition."""
+    if part_id_col and part_id_col in df.columns:
+        return F.col(part_id_col).cast("int")
+    return F.spark_partition_id()
+
+
 def _with_identity(df: DataFrame, row_id_col: str, part_id_col: str | None) -> DataFrame:
-    part = (
-        F.col(part_id_col).cast("int")
-        if part_id_col and part_id_col in df.columns
-        else F.spark_partition_id()
-    )
     return df.withColumn(ROW_ID, F.col(row_id_col).cast("string")).withColumn(
-        PART_ID, part
+        PART_ID, part_id_expr(df, part_id_col)
     )
 
 

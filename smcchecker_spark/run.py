@@ -17,13 +17,13 @@ for Spark per SURVEY.md §3.1):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smcchecker_spark.compile import VIOLATION_SCHEMA, compile_suite
+from smcchecker_spark.compile import VIOLATION_SCHEMA, compile_suite, part_id_expr
 from smcchecker_spark.constraints import ERROR, WARNING, Suite, ValidationContext
 
 VERDICT_COLS = [
@@ -47,6 +47,14 @@ class ValidationResult:
     # beside the metrics so later NDV / cross-snapshot drift analyses are
     # sketch unions, never rescans (stats.partition_hll_sketches)
     sketches: DataFrame | None = None
+    # every frame ``ValidationRunner.run`` persisted; see ``unpersist``
+    persisted: list[DataFrame] = field(default_factory=list, init=False, repr=False)
+
+    def unpersist(self) -> None:
+        """Release every frame ``ValidationRunner.run`` cached. Call once the
+        result's frames are written."""
+        for df in self.persisted:
+            df.unpersist()
 
     @property
     def errs(self) -> DataFrame:
@@ -98,11 +106,6 @@ class ValidationRunner:
         self.metrics_columns = metrics_columns
         self.metrics_sketches = metrics_sketches
 
-    def _part_expr(self, df: DataFrame):
-        if self.part_id_col and self.part_id_col in df.columns:
-            return F.col(self.part_id_col).cast("int")
-        return F.spark_partition_id()
-
     def run(
         self,
         df: DataFrame,
@@ -138,12 +141,14 @@ class ValidationRunner:
             part_id_col=self.part_id_col,
         )
         violations = core
+        persisted = []
+        part = part_id_expr(df, self.part_id_col)
         if self.suite.custom_constraints:
             # the failing-partition collect below executes the core plan;
             # persist FIRST so the later union/verdict actions reuse it
             # instead of re-running every core check
             core = core.persist()
-            violations = core
+            persisted.append(core)
             # partitions with any core ERROR skip the custom tier
             failed = {
                 r["part_id"]
@@ -154,7 +159,7 @@ class ValidationRunner:
             }
             passing = df
             if failed:
-                passing = df.filter(~self._part_expr(df).isin(list(failed)))
+                passing = df.filter(~part.isin(list(failed)))
             custom = compile_suite(
                 passing,
                 self.suite,
@@ -167,10 +172,11 @@ class ValidationRunner:
 
         # cache: verdicts + downstream writers both consume violations
         violations = violations.persist()
+        persisted.append(violations)
 
-        row_counts = df.groupBy(
-            self._part_expr(df).alias("part_id")
-        ).agg(F.count(F.lit(1)).alias("n_rows"))
+        row_counts = df.groupBy(part.alias("part_id")).agg(
+            F.count(F.lit(1)).alias("n_rows")
+        )
         vio_counts = violations.groupBy("part_id").agg(
             F.sum(
                 (F.col("severity") == ERROR).cast("long")
@@ -203,7 +209,7 @@ class ValidationRunner:
             from smcchecker_spark.stats import column_stats_by
 
             metrics = column_stats_by(
-                df.withColumn("__part", self._part_expr(df)),
+                df.withColumn("__part", part),
                 "__part",
                 self.metrics_columns,
             ).withColumnsRenamed({"__part": "part_id"}).withColumn(
@@ -213,16 +219,18 @@ class ValidationRunner:
                 from smcchecker_spark.stats import partition_hll_sketches
 
                 sketches = partition_hll_sketches(
-                    df.withColumn("__part", self._part_expr(df)),
+                    df.withColumn("__part", part),
                     "__part",
                     self.metrics_columns,
                 ).withColumnsRenamed({"part": "part_id"}).withColumn(
                     "run_id", F.lit(self.run_id)
                 )
-        return ValidationResult(
+        result = ValidationResult(
             violations=violations, verdicts=verdicts, metrics=metrics,
             sketches=sketches,
         )
+        result.persisted = persisted
+        return result
 
 
 def with_audit_columns(
@@ -285,13 +293,19 @@ def gated_append(
         bad = check_expectations(df, expectations).filter(~F.col("ok"))
         if bad.limit(1).count() > 0:
             return False
+    _append(df, path, fmt)
+    return True
+
+
+def _append(df: DataFrame, path, fmt: str) -> None:
+    """Append ``df`` to a path string written as ``fmt``, or through a
+    ``tables.*`` adapter (parquet path strings go through the adapter too)."""
     if isinstance(path, str) and fmt != "parquet":
         df.write.format(fmt).mode("append").save(path)
     else:
         from smcchecker_spark.tables import as_table
 
         as_table(path).append(df)
-    return True
 
 
 @dataclass
@@ -341,8 +355,6 @@ def gated_append_tables(
     for name in order:
         if loads[name].result.errs.limit(1).count() > 0:
             return None
-    from smcchecker_spark.tables import as_table
-
     from pyspark.sql import Observation
 
     counts: dict[str, int] = {}
@@ -354,10 +366,7 @@ def gated_append_tables(
         # plan could disagree with what was actually appended
         obs = Observation(f"gated_append_{run_id}_{name}")
         observed = ld.df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-        if isinstance(ld.path, str) and fmt != "parquet":
-            observed.write.format(fmt).mode("append").save(ld.path)
-        else:
-            as_table(ld.path).append(observed)
+        _append(observed, ld.path, fmt)
         counts[name] = int(obs.get["n_rows"])
     if tracking_path:
         spark = loads[order[0]].df.sparkSession

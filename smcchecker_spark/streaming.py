@@ -3,10 +3,11 @@
 The reference is strictly batch (one HTTP upload = one submission,
 /root/reference/proj/main.py:22-47); SURVEY.md §2.9 adopts no streaming
 for v1 semantics. This module is the engine's forward surface for a
-continuously-landing image+caption feed: each micro-batch runs the SAME
-compiled constraint suite (one fused pass + join stages — identical
-semantics and code path as batch), and violations/metrics append to the
-same sinks the batch engine writes.
+continuously-landing image+caption feed: each micro-batch runs
+``ValidationRunner.run`` — the batch runner itself, custom tier included
+(custom checks only on partitions whose core checks passed) — and its
+violations and verdicts append to sinks with a ``batch_id`` lineage
+column, the way checkpoint.py writes each wave.
 
 Shape notes (Spark-native):
 
@@ -34,8 +35,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smcchecker_spark.compile import compile_suite
+# not called here: perfbench's traced run wraps ``streaming.compile_suite``
+from smcchecker_spark.compile import compile_suite  # noqa: F401
 from smcchecker_spark.constraints import Suite, ValidationContext
+from smcchecker_spark.run import ValidationRunner
 
 
 def windowed_histograms(
@@ -204,14 +207,40 @@ def running_column_stats(
     )
 
 
+def _start(
+    self,
+    stream_df: DataFrame,
+    checkpoint_location: str,
+    trigger_once: bool = False,
+    **trigger_kwargs,
+):
+    """Attach ``self.process_batch`` to a streaming DataFrame via
+    ``foreachBatch`` and start the query — the ``start`` method of every
+    streaming class below.
+
+    ``trigger_once=True`` drains all available input then stops —
+    the batch-resume-friendly mode (and what tests use).
+    """
+    writer = stream_df.writeStream.foreachBatch(self.process_batch).option(
+        "checkpointLocation", checkpoint_location
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_kwargs:
+        writer = writer.trigger(**trigger_kwargs)
+    return writer.start()
+
+
 @dataclass
 class StreamingValidator:
     """Validates a streaming DataFrame micro-batch-by-micro-batch.
 
-    ``violations_path`` receives the engine's standard violation rows
-    (plus a ``batch_id`` lineage column); ``verdicts_path`` one row per
-    (batch_id, part_id) — the per-partition pass/fail contract at
-    micro-batch granularity.
+    Each micro-batch runs ``ValidationRunner.run`` (core tier, then the
+    custom tier on partitions with zero core errors). ``violations_path``
+    receives its violation rows plus a ``batch_id`` lineage column;
+    ``verdicts_path`` its verdict rows — the runner's verdict columns
+    minus ``run_id``, plus ``batch_id``: one row per (batch_id, part_id),
+    the per-partition pass/fail contract at micro-batch granularity.
 
     Scope note: join-level checks (Unique) see ONE micro-batch — that is
     the streaming semantic by design (a stream has no "whole table").
@@ -244,49 +273,19 @@ class StreamingValidator:
         # Micro-batches are bounded by the trigger config, so caching
         # one is safe where caching the whole table would not be.
         batch_df.persist()
-        violations = None
+        result = None
         try:
-            violations = compile_suite(
-                batch_df,
-                self.suite,
-                self.ctx,
-                row_id_col=self.row_id_col,
-                part_id_col=self.part_id_col,
-                # whole-column gates need an extra aggregate action per
-                # batch; acceptable (micro-batches are small), same
-                # semantics as batch
-                apply_gates=True,
-            ).withColumn("batch_id", F.lit(batch_id))
-            violations.persist()
+            result = ValidationRunner(
+                self.suite, self.ctx, self.row_id_col, self.part_id_col
+            ).run(batch_df)
             if self.violations_path:
-                violations.write.mode("append").parquet(self.violations_path)
+                result.violations.withColumn(
+                    "batch_id", F.lit(batch_id)
+                ).write.mode("append").parquet(self.violations_path)
             if self.verdicts_path:
-                part = (
-                    F.col(self.part_id_col).cast("int")
-                    if self.part_id_col and self.part_id_col in batch_df.columns
-                    else F.spark_partition_id()
-                )
-                counts = batch_df.groupBy(part.alias("part_id")).agg(
-                    F.count(F.lit(1)).alias("n_rows")
-                )
-                vio = violations.groupBy("part_id").agg(
-                    F.sum((F.col("severity") == "error").cast("long")).alias(
-                        "n_errors"
-                    )
-                )
-                verdicts = (
-                    counts.join(vio, "part_id", "left")
-                    .select(
-                        F.lit(batch_id).alias("batch_id"),
-                        "part_id",
-                        "n_rows",
-                        F.coalesce("n_errors", F.lit(0)).alias("n_errors"),
-                        F.when(F.coalesce("n_errors", F.lit(0)) == 0, "pass")
-                        .otherwise("fail")
-                        .alias("status"),
-                    )
-                )
-                verdicts.write.mode("append").parquet(self.verdicts_path)
+                result.verdicts.drop("run_id").withColumn(
+                    "batch_id", F.lit(batch_id)
+                ).write.mode("append").parquet(self.verdicts_path)
             if self.expectations and self.expectations_path:
                 from smcchecker_spark.stats import check_expectations
 
@@ -294,30 +293,11 @@ class StreamingValidator:
                     "batch_id", F.lit(batch_id)
                 ).write.mode("append").parquet(self.expectations_path)
         finally:
-            if violations is not None:
-                violations.unpersist()
+            if result is not None:
+                result.unpersist()
             batch_df.unpersist()
 
-    def start(
-        self,
-        stream_df: DataFrame,
-        checkpoint_location: str,
-        trigger_once: bool = False,
-        **trigger_kwargs,
-    ):
-        """Attach to a streaming DataFrame and start the query.
-
-        ``trigger_once=True`` drains all available input then stops —
-        the batch-resume-friendly mode (and what tests use).
-        """
-        writer = stream_df.writeStream.foreachBatch(self.process_batch).option(
-            "checkpointLocation", checkpoint_location
-        )
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_kwargs:
-            writer = writer.trigger(**trigger_kwargs)
-        return writer.start()
+    start = _start
 
 
 @dataclass
@@ -396,7 +376,7 @@ class StreamingNearDupGate:
         finally:
             batch_df.unpersist()
 
-    # start() attached below — shared with the phash gate
+    start = _start
 
 
 def _dup_gate_split(
@@ -507,26 +487,6 @@ def _dup_gate_split(
     return clean
 
 
-def _gate_start(
-    self,
-    stream_df: DataFrame,
-    checkpoint_location: str,
-    trigger_once: bool = False,
-    **trigger_kwargs,
-):
-    writer = stream_df.writeStream.foreachBatch(self.process_batch).option(
-        "checkpointLocation", checkpoint_location
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_kwargs:
-        writer = writer.trigger(**trigger_kwargs)
-    return writer.start()
-
-
-StreamingNearDupGate.start = _gate_start
-
-
 @dataclass
 class StreamingPhashDupGate:
     """Image twin of :class:`StreamingNearDupGate`: every micro-batch of
@@ -579,4 +539,4 @@ class StreamingPhashDupGate:
         finally:
             batch_df.unpersist()
 
-    start = _gate_start
+    start = _start

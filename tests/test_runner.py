@@ -198,3 +198,15 @@ def test_quarantine_append_routes_both_sides(spark, tmp_path):
     # quarantined rows are exactly the violating ids
     bad_ids = {r["row_id"] for r in res.violations.select("row_id").collect()}
     assert {str(r["image_id"]) for r in quar.collect()} == bad_ids
+
+
+def test_unpersist_releases_run_cache(spark):
+    """A custom-tier run caches the core violations and the unioned
+    violations; ``unpersist`` releases both."""
+    spark.catalog.clearCache()
+    res = ValidationRunner(_suite()).run(_df(spark))
+    res.verdicts.collect()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert not cache.isEmpty()
+    res.unpersist()
+    assert cache.isEmpty()

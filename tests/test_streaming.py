@@ -681,3 +681,121 @@ def test_streaming_image_policy_matches_batch(spark, tmp_path):
     }
     assert got == want and len(got) > 0
     assert len({c for _, c in got}) == 3  # all three gates fire
+
+
+# ---------------------------------------------------------------------------
+# StreamingValidator runs each micro-batch through ValidationRunner.run
+# ---------------------------------------------------------------------------
+
+
+def _drain(spark, validator, df, drops, tmp_path):
+    """Land each ``part_id`` set in ``drops`` as one parquet file and drain
+    them through ``validator``, one file per micro-batch."""
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    for i, parts in enumerate(drops):
+        df.filter(F.col("part_id").isin(parts)).coalesce(1).write.parquet(
+            f"{src}/drop{i}.parquet"
+        )
+    stream = (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src + "/*")
+    )
+    q = validator.start(
+        stream, checkpoint_location=str(tmp_path / "ckpt"), trigger_once=True
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+
+def test_stream_custom_tier_gated_per_batch(spark, tmp_path):
+    """The custom tier runs per micro-batch, only on partitions with zero
+    core errors, and the verdicts count its errors — the runner test's
+    suite (tests/test_runner.py) split over two drops."""
+    from smcchecker_spark.constraints import Range, Scale
+
+    rows = [
+        ("a", "ok", 1.5, 0),
+        ("b", "ok", 2.5, 0),  # custom Range error, part 0 passes core
+        ("c", None, 1.0, 1),  # core NotNull error
+        ("d", "ok", 1.234, 2),  # Scale warning only
+        ("e", "toolongvalue", 99.0, 1),  # core error: custom skipped
+        ("f", "ok", 3.0, 3),  # custom Range error, part 3 passes core
+    ]
+    df = spark.createDataFrame(
+        rows, "image_id string, v string, x double, part_id int"
+    )
+    suite = Suite(
+        name="s",
+        table="t",
+        constraints=[
+            NotNull("v"), MaxLength("v", max_length=8), Scale("x", scale=2),
+        ],
+        custom_constraints=[Range("x", lo=0, hi=2, is_core=False)],
+    )
+    v = StreamingValidator(
+        suite,
+        violations_path=str(tmp_path / "violations"),
+        verdicts_path=str(tmp_path / "verdicts"),
+    )
+    _drain(spark, v, df, [[0, 1], [2, 3]], tmp_path)
+
+    vio = spark.read.parquet(str(tmp_path / "violations")).collect()
+    custom = {(r["batch_id"], r["part_id"], r["row_id"])
+              for r in vio if r["check_name"] == "range_x"}
+    core_failed = {(r["batch_id"], r["part_id"]) for r in vio
+                   if r["check_name"] != "range_x" and r["severity"] == "error"}
+    assert {row for _, _, row in custom} == {"b", "f"}
+    assert not {(b, p) for b, p, _ in custom} & core_failed
+    assert len({b for b, _, _ in custom}) == 2  # both batches ran custom
+
+    verdicts = {
+        r["part_id"]: (r["status"], r["n_errors"], r["n_warnings"])
+        for r in spark.read.parquet(str(tmp_path / "verdicts")).collect()
+    }
+    assert verdicts == {
+        0: ("fail", 1, 0),
+        1: ("fail", 2, 0),
+        2: ("pass", 0, 1),
+        3: ("fail", 1, 0),
+    }
+
+
+def test_stream_verdicts_match_runner_per_drop(spark, suite_ctx, tmp_path):
+    """Per landed drop, the stream's verdict rows equal ValidationRunner.run
+    on that drop, warnings (n_warnings) and the custom tier included."""
+    from smcchecker_spark.constraints import WARNING, Range
+    from smcchecker_spark.run import ValidationRunner
+
+    base, ctx = suite_ctx
+    suite = Suite(
+        name="images_parity",
+        table="images",
+        constraints=base.constraints + [Range("w", lo=8, hi=28, severity=WARNING)],
+        custom_constraints=[Range("h", lo=8, hi=28, is_core=False)],
+    )
+    # every planted partition fails core; clean parts 4 and 5 pass it, so
+    # the custom tier runs in both batches
+    clean = fixtures.generate_images(spark, n_rows=60, n_parts=2, seed=42,
+                                     clean=True)
+    df = fixtures.generate_images(spark, n_rows=300, n_parts=4, seed=42)
+    df = df.unionByName(clean.withColumn("part_id", F.col("part_id") + 4))
+    drops = [[0, 1, 4], [2, 3, 5]]
+    v = StreamingValidator(suite, ctx, verdicts_path=str(tmp_path / "verdicts"))
+    _drain(spark, v, df, drops, tmp_path)
+
+    cols = ["part_id", "status", "n_rows", "n_errors", "n_warnings"]
+    got = spark.read.parquet(str(tmp_path / "verdicts")).collect()
+    by_batch: dict = {}
+    for r in got:
+        by_batch.setdefault(r["batch_id"], set()).add(tuple(r[c] for c in cols))
+    want = []
+    for parts in drops:
+        res = ValidationRunner(suite, ctx).run(
+            df.filter(F.col("part_id").isin(parts)))
+        want.append({tuple(r[c] for c in cols) for r in res.verdicts.collect()})
+        res.unpersist()
+    assert sorted(by_batch.values(), key=sorted) == sorted(want, key=sorted)
+    assert sum(r["n_warnings"] for r in got) > 0
+    assert all(r["n_errors"] > 0 for r in got if r["part_id"] >= 4)  # custom
