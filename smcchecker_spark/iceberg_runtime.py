@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 # Spark 4.x needs iceberg-spark-runtime-4.0/4.1; older 3.x jars would fail
 # at class-load. We accept any spark-runtime jar and let the subprocess
@@ -54,6 +55,11 @@ def _candidate_dirs() -> list[str]:
     return dirs
 
 
+def _version_key(path: str) -> tuple[list[int], str]:
+    # numbers of the trailing "-X.Y.Z.jar" (1.10.0 above 1.9.1), then path
+    return [int(x) for x in re.findall(r"\d+", path.rsplit("-", 1)[-1])], path
+
+
 def find_iceberg_jar() -> str | None:
     """Locate an iceberg-spark-runtime jar, or ``None`` if absent.
 
@@ -72,11 +78,11 @@ def find_iceberg_jar() -> str | None:
         if not os.path.isdir(d):
             continue
         for pat in _JAR_GLOBS:
-            hits = sorted(glob.glob(os.path.join(d, pat))) or sorted(
-                glob.glob(os.path.join(d, "**", pat), recursive=True)
+            hits = glob.glob(os.path.join(d, pat)) or glob.glob(
+                os.path.join(d, "**", pat), recursive=True
             )
             if hits:
-                return hits[-1]  # highest version sorts last
+                return max(hits, key=_version_key)
     return None
 
 

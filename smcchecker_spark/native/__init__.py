@@ -2,12 +2,13 @@
 
 The pure-Python/numpy codecs are the reference implementations and the
 always-available fallback — this package only ACCELERATES them. At
-first use it compiles the bundled self-contained C99 kernels with the
-host C compiler (``cc``) into a per-source-hash shared object under the
-system temp dir and loads it via ctypes. Anything missing — no
-compiler, sandboxed /tmp, exotic platform — degrades silently to the
-Python path; ``SMC_NATIVE=0`` disables native kernels outright (used by
-the parity tests to pin the Python path).
+first use it reads a bundled C99 kernel's source through the package
+loader, so it builds from the source tree and the ``--py-files`` zip
+alike, compiles it with the host ``cc`` into a per-source-hash .so under
+the system temp dir and loads it via ctypes. No compiler, sandboxed
+/tmp or an exotic platform degrades silently to the Python path (this
+silence hid 0-of-5 kernels on zip-importing Spark workers until a
+benchmark counted them); ``SMC_NATIVE=0`` pins it (parity tests).
 
 Why compile-on-demand instead of shipping a wheel: the engine ships as
 a ``spark-submit --py-files`` zip (pure Python by contract), so a
@@ -32,26 +33,19 @@ from __future__ import annotations
 
 import ctypes
 import hashlib
+import importlib.resources
 import os
 import subprocess
-import sys
 import tempfile
-
-_DIR = os.path.dirname(os.path.abspath(__file__))
 
 # compiled-library handles, populated lazily; False = tried and failed
 _cache: dict[str, object] = {}
 
 
 def _build(src_name: str) -> str | None:
-    """Compile ``src_name`` (bundled .c) to a cached .so; return its
-    path, or None when the environment can't build it."""
-    src_path = os.path.join(_DIR, src_name)
-    try:
-        with open(src_path, "rb") as fh:
-            src = fh.read()
-    except OSError:
-        return None
+    """Compile bundled ``src_name`` to a cached .so and return its path;
+    None if the host can't build it (a missing source raises)."""
+    src = importlib.resources.files(__package__).joinpath(src_name).read_bytes()
     tag = hashlib.sha256(src).hexdigest()[:16]
     base = os.path.join(
         tempfile.gettempdir(),
@@ -63,7 +57,8 @@ def _build(src_name: str) -> str | None:
     tmp = f"{base}.{os.getpid()}.tmp"
     try:
         subprocess.run(
-            ["cc", "-O2", "-shared", "-fPIC", "-o", tmp, src_path],
+            ["cc", "-O2", "-shared", "-fPIC", "-x", "c", "-o", tmp, "-"],
+            input=src,
             check=True,
             capture_output=True,
             timeout=120,
@@ -79,23 +74,22 @@ def _build(src_name: str) -> str | None:
 
 
 def _load(src_name: str):
-    key = src_name
-    hit = _cache.get(key)
+    hit = _cache.get(src_name)
     if hit is not None:
         return hit if hit is not False else None
     if os.environ.get("SMC_NATIVE", "1") == "0":
-        _cache[key] = False
+        _cache[src_name] = False
         return None
     so_path = _build(src_name)
     if so_path is None:
-        _cache[key] = False
+        _cache[src_name] = False
         return None
     try:
         lib = ctypes.CDLL(so_path)
     except OSError:
-        _cache[key] = False
+        _cache[src_name] = False
         return None
-    _cache[key] = lib
+    _cache[src_name] = lib
     return lib
 
 

@@ -28,6 +28,7 @@ import sys
 
 import pytest
 
+from smcchecker_spark import iceberg_runtime
 from smcchecker_spark.iceberg_runtime import (
     find_iceberg_jar,
     iceberg_session_confs,
@@ -59,6 +60,18 @@ def test_jar_discovery_contract(tmp_path, monkeypatch):
     monkeypatch.setenv("ICEBERG_SPARK_RUNTIME_JAR", str(tmp_path / "nope.jar"))
     with pytest.raises(FileNotFoundError):
         find_iceberg_jar()
+
+
+def test_jar_discovery_picks_highest_version(tmp_path, monkeypatch):
+    """Among several runtime jars the numerically highest version wins:
+    1.10.0 beats 1.9.1, which a plain string sort gets backwards."""
+    for v in ("1.9.1", "1.10.0", "1.2.0"):
+        (tmp_path / f"iceberg-spark-runtime-4.0_2.13-{v}.jar").write_bytes(b"PK")
+    monkeypatch.delenv("ICEBERG_SPARK_RUNTIME_JAR", raising=False)
+    monkeypatch.setattr(iceberg_runtime, "_candidate_dirs", lambda: [str(tmp_path)])
+    assert find_iceberg_jar() == str(
+        tmp_path / "iceberg-spark-runtime-4.0_2.13-1.10.0.jar"
+    )
 
 
 def test_session_confs_shape(tmp_path):
